@@ -7,6 +7,7 @@ and every index), and that directory is removed when the run ends.
 
 from __future__ import annotations
 
+import gc
 import os
 import shutil
 import signal
@@ -89,6 +90,13 @@ def start_spark(ws: Workspace, cores: int):
             f"-Dderby.system.home={tmp}",
         },
     )
+
+
+def collect_garbage(spark) -> None:
+    """A full GC in the driver JVM and in this process at the end of
+    set-up, so that set-up garbage is not collected inside a measurement."""
+    spark.sparkContext._jvm.System.gc()
+    gc.collect()
 
 
 def _children() -> dict[int, list[int]]:

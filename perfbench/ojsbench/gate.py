@@ -65,6 +65,7 @@ class Oracle:
         self._index = build_oracle_index(self._docs)
         self._deleted: set[int] = set()
         self._live: set[int] | None = None
+        self._cache: dict[tuple[str, int], pd.DataFrame] = {}
 
     @property
     def n_docs(self) -> int:
@@ -82,6 +83,7 @@ class Oracle:
         other._index = self._index
         other._deleted = set(self._deleted)
         other._live = self._live
+        other._cache = {}
         return other
 
     def append(self, docs: pd.DataFrame) -> None:
@@ -89,10 +91,12 @@ class Oracle:
         self._docs = pd.concat([self._docs, docs], ignore_index=True)
         self._index = _merge(self._index, build_oracle_index(docs))
         self._live = None
+        self._cache = {}
 
     def delete(self, doc_ids) -> None:
         self._deleted.update(int(d) for d in doc_ids)
         self._live = None
+        self._cache = {}
 
     def purge(self) -> None:
         """A merge expunged the deleted docs: statistics drop them too."""
@@ -118,11 +122,28 @@ class Oracle:
             df={t: len(p) for t, p in tf.items()},
         )
         self._live = None
+        self._cache = {}
 
     def expected(self, queries: pd.DataFrame) -> pd.DataFrame:
-        filters = None
-        if self._deleted:
-            if self._live is None:
-                self._live = set(self._index.dl) - self._deleted
-            filters = {int(q): self._live for q in queries["query_id"]}
-        return oracle_topk(self._index, queries, filters)
+        """Oracle top-k for `queries`. Answers are kept per (text, k) until
+        the next append, delete or purge, so repeated queries cost the
+        oracle once."""
+        keys = list(zip(queries["query_text"], queries["k"].astype(int)))
+        todo = queries[[key not in self._cache for key in keys]]
+        todo = todo.drop_duplicates(["query_text", "k"])
+        if len(todo):
+            filters = None
+            if self._deleted:
+                if self._live is None:
+                    self._live = set(self._index.dl) - self._deleted
+                filters = {int(q): self._live for q in todo["query_id"]}
+            got = oracle_topk(self._index, todo, filters)
+            by_id = {int(q): f for q, f in got.groupby("query_id")}
+            for q in todo.itertuples(index=False):
+                rows = by_id.get(int(q.query_id), got.iloc[:0])
+                self._cache[(q.query_text, int(q.k))] = rows.drop(
+                    columns="query_id")
+        parts = [self._cache[key].assign(query_id=np.int32(qid))
+                 for key, qid in zip(keys, queries["query_id"])]
+        return pd.concat(parts, ignore_index=True).astype(
+            {"query_id": np.int32})

@@ -4,8 +4,10 @@ counts without instrumenting the engine.
 
 The replay reads exactly the posting rows the request's terms select from
 the index files the request was served from, decodes them per segment
-with `decode_segment_postings` and ranks them with `maxscore_topk` using
-the same weights and upper bounds the engine computes.
+with `decode_segment_postings` and ranks them with `maxscore_topk` the
+way the engine's per-segment kernel does: the same weights, upper bounds
+computed once per segment, and one tf_norm cache per segment shared by
+every query of the request.
 """
 
 from __future__ import annotations
@@ -56,18 +58,29 @@ def replay(run, handle, queries) -> None:
             meta = {t: (np.asarray(a, np.int64), np.asarray(b, np.int64))
                     for t, a, b in zip(seg["term"], seg["block_max_tf"],
                                        seg["block_min_dl"])}
-            for qtf, k in qtfs.values():
-                tw = {t: float(c) * bm25_idf_py(global_df[t], handle.n_docs)
+            weights = {
+                qid: {t: float(c) * bm25_idf_py(global_df[t], handle.n_docs)
                       for t, c in qtf.items()
                       if t in decoded and t in global_df}
-                if not tw:
-                    continue
-                tp = {t: decoded[t] for t in tw}
-                ubs = {t: term_upper_bound(tw[t], *meta[t], handle.avgdl)
-                       for t in tw}
-                postings_in = sum(len(tp[t][0]) for t in tp)
-                with tr.span("wand.kernel") as wsp:
-                    docs, _ = maxscore_topk(tp, tw, ubs, k, handle.avgdl,
-                                            denied=denied)
-                tr.note(wsp, postings_in=postings_in,
-                        results_per_posting=len(docs) / postings_in)
+                for qid, (qtf, _) in qtfs.items()}
+            postings_in = results = 0
+            # As the engine's kernel does per segment: idf-free upper bounds
+            # and the tf_norm cache are computed once and shared by every
+            # query of the request.
+            with tr.span("wand.kernel") as wsp:
+                norm_cache: dict[str, np.ndarray] = {}
+                ub_base = {t: term_upper_bound(1.0, *meta[t], handle.avgdl)
+                           for t in decoded}
+                for qid, tw in weights.items():
+                    if not tw:
+                        continue
+                    tp = {t: decoded[t] for t in tw}
+                    ubs = {t: tw[t] * ub_base[t] for t in tw}
+                    docs, _ = maxscore_topk(tp, tw, ubs, qtfs[qid][1],
+                                            handle.avgdl, denied=denied,
+                                            tf_norm_cache=norm_cache)
+                    postings_in += sum(len(tp[t][0]) for t in tp)
+                    results += len(docs)
+            tr.note(wsp, postings_in=postings_in,
+                    results_per_posting=results / postings_in
+                    if postings_in else 0.0)

@@ -2,21 +2,21 @@
 synthesize_transcripts, assign_doc_ids, build_index, merge_segments,
 append_batch, delete_docs, load_index and search.
 
-Every workload runs the full index lifecycle at least once, so every
-end-to-end metric has samples on every workload; what differs is where
-the measured window spends its time.
-
-- ingest: the window repeats the lifecycle (build, merge, appends with
-  deletes between them, then oracle-checked reference queries) on fresh
-  index directories. Build-side layers do nearly all the work.
-- search_merged: the set-up builds, then twice appends a tail batch
-  and force-merges, deleting a few docs before the last merge; the window
-  sends rounds of single queries from a popularity-skewed mix and one
-  fixed-size batch (closed loop, one client).
+- ingest: the window repeats a lifecycle (build, merge, an append, a
+  delete, a few queries on the live index) on fresh index directories and
+  ends with the oracle-checked reference queries. Build-side layers do
+  nearly all the work.
+- search_merged: the set-up builds the force-merged index the window
+  serves from (build, one streamed tail batch, forceMerge(1)). The window
+  sends single queries from a popularity-skewed mix, then fixed-size
+  batches (closed loop, one client).
 - search_live: the set-up builds an unmerged index; the window sends
   distinct queries while every few requests are an append or a delete,
   reloading the index handle after each write. After the window the index
   is force-merged (expunging the deletes) and checked once more.
+
+Every end-to-end metric is reported on every workload, so each workload
+runs each lifecycle step at least once.
 """
 
 from __future__ import annotations
@@ -49,7 +49,7 @@ from opensearch_jvector_plugin_spark.streaming.incremental import append_batch
 
 from . import environment
 from .gate import Oracle
-from .queries import QueryMix, frame
+from .queries import BLOCK, QueryMix, frame
 from .replay import replay
 from .runner import Run, dir_bytes
 
@@ -60,21 +60,30 @@ APPEND_SEG_SIZE = 100_000
 SIZES = {
     "turns": 10_000,          # corpus turns (10 turns per conversation)
     "turns_per_conv": 10,
+    "warmup_turns": 1_000,    # corpus turns of the set-up's warm-up lifecycle
     "append_turns": 500,      # one append_batch micro-batch
     "delete_docs": 24,        # docIDs per delete_docs call
-    "batch_size": 64,         # queries per search() call in batch requests
-    "ingest_appends": 1,      # append + delete rounds per ingest lifecycle
-    "ingest_singles": 3,      # single-query requests per append round
-    "ingest_cycle_s": 8,      # nominal seconds per ingest lifecycle
-    "merged_appends": 2,      # append + merge rounds in set-up
-    "merged_pool": 400,       # distinct queries in the search_merged mix
-    "merged_singles": 4,      # single-query requests per batch request
+    "batch_size": 48,         # queries per batch request: 4 mix blocks
+    "ingest_cycle_s": 12,     # nominal seconds per ingest lifecycle
+    "ingest_batches": 1,      # batch requests per ingest lifecycle
+    "merged_warmup": 2,       # unsampled single queries after set-up
+    "merged_single_blocks": 1,  # single-query requests, in mix blocks
     "live_write_every": 5,    # every 5th search_live request is a write
     "live_batch_every": 7,    # every 7th search_live request is a batch
 }
 
 MARK_EVERY = 10  # every 10th appended turn carries its batch's marker term
 WARMUP = "warmup"  # request id of the set-up's unsampled warm-up calls
+
+# ingest's single queries, as SHAPES indices: the reference set's 2-term,
+# 4-term-with-a-rare-term and 4-term shapes. All of them match, so ingest's
+# few latency samples do not depend on which shapes a seed draws.
+INGEST_SHAPES = (4, 5, 6)
+
+
+def text_bytes(corpus: pd.DataFrame) -> int:
+    """UTF-8 bytes of the corpus text."""
+    return int(corpus["text"].map(lambda t: len(t.encode("utf-8"))).sum())
 
 
 class Lifecycle:
@@ -107,11 +116,13 @@ class Lifecycle:
         run.call("sources.synthesize", lambda: synthesize_transcripts(
             self.spark, self.n // self.tpc, self.tpc, seed=run.seed,
         ).write.parquet(path))
-        pdf = synthesize_transcripts_pdf(
-            np.arange(self.n), self.n // self.tpc, self.tpc, seed=run.seed)
-        pdf["doc_id"] = np.arange(self.n, dtype=np.int64)
-        self.text_bytes = int(pdf["text"].map(
-            lambda t: len(t.encode("utf-8"))).sum())
+        # The driver-side copy is for the oracle and the bytes ratio only;
+        # the engine never makes it, so it stays out of set-up time.
+        with run.oracle():
+            pdf = synthesize_transcripts_pdf(
+                np.arange(self.n), self.n // self.tpc, self.tpc, seed=run.seed)
+            pdf["doc_id"] = np.arange(self.n, dtype=np.int64)
+            self.text_bytes = text_bytes(pdf)
         if self.record:
             run.props["turns"] = self.n
             run.props["text_bytes"] = self.text_bytes
@@ -130,10 +141,17 @@ class Lifecycle:
 
     # --- engine calls ---------------------------------------------------
 
-    def build(self, corpus_path: str, index_dir: str) -> None:
+    def build(self, corpus_path: str, index_dir: str,
+              first_turns: int | None = None) -> None:
+        """Build from the corpus at `corpus_path`, or from its first
+        `first_turns` turns (whole conversations)."""
         run = self.run
+        source = self.spark.read.parquet(corpus_path)
+        if first_turns is not None:
+            source = source.where(
+                source["conv_id"] < f"conv{first_turns // self.tpc:08d}")
         corpus, asp = run.call("docids.assign", lambda: assign_doc_ids(
-            self.spark.read.parquet(corpus_path), ["conv_id", "turn_idx"]))
+            source, ["conv_id", "turn_idx"]))
         try:
             stats, bsp = run.call("build.build_index", lambda: build_index(
                 corpus, index_dir, align_partitions=True))
@@ -268,60 +286,82 @@ def _dict_props(run: Run, index_dir: str) -> None:
     run.props["dict_driver_max_bytes"] = DICT_DRIVER_MAX_BYTES
 
 
+def warm_up(run: Run, corpus_path: str, corpus: pd.DataFrame) -> None:
+    """The set-up's warm-up, not sampled: one lifecycle (build, merge,
+    append, a query, a delete, a batch) on the first `warmup_turns` turns
+    of the corpus. It pays what the first call of each kind pays in a fresh
+    process (class loading, JIT, Spark code generation, the Python workers'
+    engine imports), which hardly depends on the corpus size."""
+    with run.tracer.span("session.warmup", request=WARMUP):
+        life = Lifecycle(run, run.sizes["warmup_turns"], "warmup",
+                         record=False)
+        with run.oracle():
+            first = corpus.iloc[: life.n]
+            oracle = Oracle(first)
+            life.text_bytes = text_bytes(first)
+        index_dir = run.ws.path("warmup-index")
+        life.build(corpus_path, index_dir, first_turns=life.n)
+        life.merge(index_dir, life.n)
+        life.append(index_dir, 0, oracle)
+        handle = life.load(index_dir)
+        recent = life.request(
+            handle, [life.mix.query("fresh0", INGEST_SHAPES[0])], oracle)
+        life.delete(index_dir, life.victims(oracle, recent), oracle)
+        handle = life.load(index_dir)
+        life.request(handle, [life.mix.query()
+                              for _ in range(run.sizes["batch_size"])], oracle)
+    shutil.rmtree(index_dir, ignore_errors=True)
+
+
 def ingest(run: Run) -> None:
     sizes = run.sizes
-    appends = sizes["ingest_appends"]
     with run.setup():
         run.start(environment.n_cores())
         life = Lifecycle(run, sizes["turns"], "ingest")
         corpus_path, corpus = life.write_corpus()
         with run.oracle():
             base_oracle = Oracle(corpus)
-        # Per append: one query that hits the fresh turns, then the rest
-        # after a delete.
-        per = sizes["ingest_singles"]
-        singles = [life.mix.query(f"fresh{i // per}" if i % per == 0 else None)
-                   for i in range(per * appends)]
-        reference = _reference_rows(life.n)
+        warm_up(run, corpus_path, corpus)
+        environment.collect_garbage(run.spark)
 
-        def lifecycle(index_dir: str, warm_up: bool = False) -> None:
-            with run.oracle():
-                oracle = base_oracle.copy()
-            life.build(corpus_path, index_dir)
-            life.merge(index_dir, life.n)
-            for a in range(appends):
-                life.append(index_dir, a, oracle)
-                handle = life.load(index_dir)
-                first = per * a
-                recent = life.request(handle, [singles[first]], oracle,
-                                      first_id=first)
-                life.delete(index_dir, life.victims(oracle, recent), oracle)
-                if warm_up:
-                    return
-                handle = life.load(index_dir)
-                for q in range(first + 1, first + per):
-                    life.request(handle, [singles[q]], oracle, first_id=q)
-            life.sample("storage_index_bytes", dir_bytes(index_dir))
-            life.request(handle, reference, oracle)
+    def lifecycle(index_dir: str):
+        with run.oracle():
+            oracle = base_oracle.copy()
+        life.build(corpus_path, index_dir)
+        life.merge(index_dir, life.n)
+        life.append(index_dir, 0, oracle)
+        handle = life.load(index_dir)
+        # A query that hits the turns just appended; half of the docs
+        # deleted next come from its results.
+        shapes = iter(INGEST_SHAPES)
+        recent = life.request(
+            handle, [life.mix.query("fresh0", next(shapes))], oracle)
+        life.delete(index_dir, life.victims(oracle, recent), oracle)
+        handle = life.load(index_dir)
+        for shape in shapes:
+            life.request(handle, [life.mix.query(shape=shape)], oracle)
+        life.mix.new_block()
+        for _ in range(sizes["ingest_batches"]):
+            life.request(handle, [life.mix.query()
+                                  for _ in range(sizes["batch_size"])],
+                         oracle)
+        life.sample("storage_index_bytes", dir_bytes(index_dir))
+        return oracle, handle
 
-        # Warm-up: one lifecycle (up to the first delete) starts the Python
-        # workers' engine code, the JIT and Spark code generation. It is
-        # part of set-up and not sampled.
-        with run.tracer.span("session.warmup", request=WARMUP):
-            life.record = False
-            lifecycle(run.ws.path("ingest-warmup"), warm_up=True)
-            life.record = True
-    shutil.rmtree(run.ws.path("ingest-warmup"), ignore_errors=True)
-
-    # A fixed number of lifecycles per run (about one per
-    # `ingest_cycle_s` of the window), so that every run does the same work.
-    cycles = max(1, round(run.seconds / sizes["ingest_cycle_s"]))
+    # A fixed number of lifecycles per run (about one per `ingest_cycle_s`
+    # of the window, at least two), so that every run does the same work.
+    cycles = max(2, round(run.seconds / sizes["ingest_cycle_s"]))
     for cycle in range(cycles):
         index_dir = run.ws.path(f"ingest-{cycle}")
         with run.tracer.span("client.cycle", request=f"cycle{cycle}"):
-            lifecycle(index_dir)
+            oracle, handle = lifecycle(index_dir)
         if cycle == 0:
             _dict_props(run, index_dir)
+        if cycle == cycles - 1:
+            # The run ends with the reference queries, checked, not sampled.
+            with run.tracer.span("client.reference", request="reference"):
+                life.request(handle, _reference_rows(life.n), oracle,
+                             sample=False)
         shutil.rmtree(index_dir, ignore_errors=True)
     run.props["cycles"] = cycles
     life.finish()
@@ -329,48 +369,50 @@ def ingest(run: Run) -> None:
 
 def search_merged(run: Run) -> None:
     sizes = run.sizes
+    batch = sizes["batch_size"]
     with run.setup():
         run.start(environment.n_cores())
         life = Lifecycle(run, sizes["turns"], "merged")
         corpus_path, corpus = life.write_corpus()
-        index_dir = run.ws.path("merged-index")
-        life.build(corpus_path, index_dir)
         with run.oracle():
             oracle = Oracle(corpus)
-        # Streamed tail batches, each followed by a compaction
-        # (forceMerge(1)); deletes come before the last one, which expunges
-        # them. (Deletes before an earlier merge would hit a known engine
-        # defect: a later append restores the purged docs to stats.json.)
-        rounds = sizes["merged_appends"]
-        for a in range(rounds):
-            life.append(index_dir, a, oracle)
-            if a == rounds - 1:
-                life.delete(index_dir, life.victims(oracle, None), oracle)
-            life.merge(index_dir, oracle.n_docs - len(oracle.deleted))
-        with run.oracle():
-            oracle.purge()
+        warm_up(run, corpus_path, corpus)
+        # The served index: a bulk build, one streamed tail batch, then a
+        # forceMerge(1). (The tail batch is there so that append_p50_s has
+        # a sample on this workload too.)
+        index_dir = run.ws.path("merged-index")
+        life.build(corpus_path, index_dir)
+        life.append(index_dir, 0, oracle)
+        life.merge(index_dir, oracle.n_docs)
         handle = life.load(index_dir)
-        draw = life.mix.popular_pool(sizes["merged_pool"])
-        # Warm-up: the first query compiles the serving path; not sampled.
+        draw = life.mix.popular()
+        # The first requests on the merged layout compile its serving path;
+        # not sampled.
         with run.tracer.span("session.warmup", request=WARMUP):
-            life.request(handle, [draw()], oracle, first_id=-1, sample=False)
+            for _ in range(sizes["merged_warmup"]):
+                life.request(handle, [draw()], oracle, sample=False)
+            life.request(handle, [draw() for _ in range(batch)], oracle,
+                         sample=False)
+        environment.collect_garbage(run.spark)
     run.sample("storage_index_bytes", dir_bytes(index_dir))
     _dict_props(run, index_dir)
 
-    # Closed loop, one client: rounds of `merged_singles` single-query
-    # requests and one batch request, until the window ends.
+    # Closed loop, one client: `merged_single_blocks` whole blocks of the
+    # mix as single-query requests, then fixed-size batches until the
+    # window ends.
+    life.mix.new_block()
     deadline = run.deadline()
-    i = rounds = 0
-    while run.now() < deadline or rounds < 2:
-        for _ in range(sizes["merged_singles"]):
-            with run.tracer.span("client.single", request=f"q{i}"):
-                life.request(handle, [draw()], oracle, first_id=i)
-            i += 1
-        rows = [draw() for _ in range(sizes["batch_size"])]
-        with run.tracer.span("client.batch", request=f"b{rounds}"):
-            life.request(handle, rows, oracle, first_id=i)
-        i += len(rows)
-        rounds += 1
+    i = b = 0
+    while i < BLOCK * sizes["merged_single_blocks"]:
+        with run.tracer.span("client.single", request=f"q{i}"):
+            life.request(handle, [draw()], oracle, first_id=i)
+        i += 1
+    while run.now() < deadline or b < 2:
+        with run.tracer.span("client.batch", request=f"b{b}"):
+            life.request(handle, [draw() for _ in range(batch)], oracle,
+                         first_id=i)
+        i += batch
+        b += 1
     life.finish()
 
 
@@ -380,11 +422,13 @@ def search_live(run: Run) -> None:
         run.start(environment.n_cores())
         life = Lifecycle(run, sizes["turns"], "live")
         corpus_path, corpus = life.write_corpus()
+        with run.oracle():
+            oracle = Oracle(corpus)
+        warm_up(run, corpus_path, corpus)
         index_dir = run.ws.path("live-index")
         life.build(corpus_path, index_dir)
         handle = life.load(index_dir)
-    with run.oracle():
-        oracle = Oracle(corpus)
+        environment.collect_garbage(run.spark)
     _dict_props(run, index_dir)
 
     seen: set[str] = set()

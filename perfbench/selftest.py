@@ -24,11 +24,12 @@ ROOT = os.path.dirname(HERE)
 
 TINY = {
     "turns": 1_000,
+    "warmup_turns": 200,
     "append_turns": 50,
     "delete_docs": 6,
-    "batch_size": 8,
-    "merged_pool": 40,
-    "merged_singles": 2,
+    "batch_size": 12,
+    "ingest_batches": 1,
+    "merged_warmup": 1,
 }
 SECONDS = 2.0
 
