@@ -15,7 +15,9 @@ JVectorWriter.java:177-196,333-350), Spark-first:
       -> driver writes manifests/seg-K.json      (commit marker: a segment
                                                   whose manifest exists is
                                                   DONE and skipped on resume)
-      -> stats.json (N, total_dl, avgdl)         (the "trained state")
+      -> stats.json (N, total_dl, avgdl, max_doc) (the "trained state";
+                                                  finalize_index is its one
+                                                  writer, net of merge purges)
       -> dict/ parquet (term -> global df, ctf)  (column-pruned scan of the
                                                   segment metadata, no blobs)
 
@@ -45,6 +47,7 @@ from pyspark.sql import functions as F
 from .. import FORMAT_VERSION
 from ..functions.tokenizer import TOKENIZER_VERSION
 from .codec import CODEC_VERSION
+from .deletes import _read as _read_deletes
 from .segment import encode_segment
 
 POSTINGS_SPARK_SCHEMA = (
@@ -278,22 +281,33 @@ def build_index(
 
 
 def finalize_index(spark: SparkSession, index_dir: str, storage=None) -> dict:
-    """stats.json + global term dictionary from committed manifests.
+    """The one writer of stats.json, plus the global term dictionary.
 
-    The dict job reads only metadata columns of the segment postings -
-    Parquet column pruning never touches the blobs."""
+    Stats fold the committed manifests minus what merges purged (the
+    `purged` ids and their `purged_dl` in deletes.json). The dict reads
+    only metadata columns of the postings - Parquet column pruning never
+    touches the blobs. Once a merge has purged docs, their postings are
+    gone only from the merged generation, so the dict then reads that
+    generation plus the raw segments it has not seen."""
     st = _text_storage(storage)
     manifests = committed_segments(index_dir, storage=st)
-    n_docs = sum(m["n_docs"] for m in manifests.values())
-    total_dl = sum(m["sum_dl"] for m in manifests.values())
+    deletes = _read_deletes(index_dir)
+    n_docs = sum(m["n_docs"] for m in manifests.values()) - len(
+        deletes["purged"]
+    )
+    total_dl = sum(m["sum_dl"] for m in manifests.values()) - int(
+        deletes["purged_dl"]
+    )
     stats = {
         "format_version": FORMAT_VERSION,
         "tokenizer_version": TOKENIZER_VERSION,
         "codec_version": CODEC_VERSION,
         "n_docs": n_docs,
-        # docID-space bound: purge shrinks n_docs but never renumbers, so
-        # delete validation checks against max_doc, which never shrinks.
-        "max_doc": n_docs,
+        # docID high-water mark: purge shrinks n_docs but never renumbers,
+        # and raw manifests are never rewritten, so max_doc never shrinks.
+        # Deletes validate against it; appends start above it.
+        "max_doc": max((m["doc_hi"] for m in manifests.values()), default=-1)
+        + 1,
         "total_dl": total_dl,
         "avgdl": (total_dl / n_docs) if n_docs else 0.0,
         "n_segments": len(manifests),
@@ -304,9 +318,21 @@ def finalize_index(spark: SparkSession, index_dir: str, storage=None) -> dict:
         json.dumps(stats, indent=1, sort_keys=True).encode(),
     )
 
-    seg_glob = os.path.join(index_dir, "segments")
     if manifests:
-        postings_meta = spark.read.parquet(seg_glob).select("term", "df", "ctf")
+        raw = spark.read.parquet(os.path.join(index_dir, "segments"))
+        postings_meta = raw.select("term", "df", "ctf")
+        if deletes["purged"]:
+            merged = json.loads(
+                st.read_bytes(os.path.join(index_dir, "merged_manifest.json"))
+            )
+            postings_meta = (
+                spark.read.parquet(os.path.join(index_dir, "merged"))
+                .select("term", "df", "ctf")
+                .unionByName(
+                    raw.where(~F.col("seg_id").isin(merged["input_segments"]))
+                    .select("term", "df", "ctf")
+                )
+            )
         (
             postings_meta.groupBy("term")
             .agg(F.sum("df").cast("long").alias("df"),

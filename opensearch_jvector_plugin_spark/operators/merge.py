@@ -29,7 +29,7 @@ import pyarrow.parquet as pq
 from pyspark.sql import SparkSession
 from pyspark.sql import functions as F
 
-from .build import committed_segments
+from .build import committed_segments, finalize_index
 from .codec import (
     PostingList,
     decode_postings,
@@ -264,42 +264,6 @@ def merge_segments(
         .applyInPandas(merge_group, MERGE_SUMMARY_SCHEMA)
         .collect()
     )
-    # --- expunge-deletes bookkeeping: adjust stats for the ids this merge
-    # purged for the first time, rebuild the dict from the merged postings
-    # (per-term df changed), and record the purge. Idempotent: a re-merge
-    # finds pending empty and skips all of this.
-    if len(_pending):
-        dl_purged = sum(int(r["dl_purged"]) for r in summaries)
-        stats_path = os.path.join(index.index_dir, "stats.json")
-        with open(stats_path) as f:
-            stats = json.load(f)
-        old_n = int(stats["n_docs"])
-        old_total = int(
-            stats.get("total_dl", round(float(stats["avgdl"]) * old_n))
-        )
-        stats.setdefault("max_doc", old_n + int(len(_deleted) - len(_pending)))
-        stats["n_docs"] = old_n - int(len(_pending))
-        stats["total_dl"] = old_total - dl_purged
-        stats["avgdl"] = (
-            stats["total_dl"] / stats["n_docs"] if stats["n_docs"] else 0.0
-        )
-        st.put_bytes(
-            stats_path, json.dumps(stats, indent=1, sort_keys=True).encode()
-        )
-        (
-            spark.read.parquet(merged_dir)
-            .select("term", "df", "ctf")
-            .groupBy("term")
-            .agg(F.sum("df").cast("long").alias("df"),
-                 F.sum("ctf").cast("long").alias("ctf"))
-            # coalesce, not repartition: same dict content, no second
-            # exchange after the groupBy (round 7).
-            .coalesce(max(1, min(32, len(seg_ids))))
-            .write.mode("overwrite")
-            .parquet(index.dict_path)
-        )
-        mark_purged(index.index_dir, storage=st)
-
     manifest = {
         "fan_in": fan_in,
         "input_segments": seg_ids,
@@ -319,6 +283,15 @@ def merge_segments(
         os.path.join(index.index_dir, "merged_manifest.json"),
         json.dumps(manifest, indent=1, sort_keys=True).encode(),
     )
+    # Expunge-deletes bookkeeping: record the ids this merge purged for the
+    # first time, then re-finalize stats and the dict from the committed
+    # generation. Idempotent: a re-merge finds pending empty and skips both.
+    if len(_pending):
+        mark_purged(
+            index.index_dir, sum(int(r["dl_purged"]) for r in summaries),
+            storage=st,
+        )
+        finalize_index(spark, index.index_dir, storage=st)
     from ..plans.metrics import append_metrics
 
     append_metrics(

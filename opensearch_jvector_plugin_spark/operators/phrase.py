@@ -25,7 +25,8 @@ Spark-first:
 - **The indexed path is two-phase** like every served query in this engine:
   candidate docIDs from the sorted intersection of the phrase terms'
   posting lists (SURVEY §2.3 in-kernel docID-sorted intersection — a doc
-  lacking ANY phrase term cannot contain the phrase), then exact positional
+  lacking ANY phrase term cannot contain the phrase; the collector that
+  `query.scan_segments` runs per segment), then exact positional
   verification of the candidates ONLY, against re-injected stored text
   (the derived-source contract: the index never stores text). At 100 TB the
   verification join touches |candidates| <= min-df(phrase terms) rows per
@@ -49,10 +50,9 @@ from ..functions.bm25 import bm25_idf, bm25_idf_py, bm25_tf_norm
 from ..functions.tokenizer import tokenize_col, tokenize_text
 from .query import (
     IndexHandle,
-    _filter_terms,
+    _live_mask,
     _query_weights,
-    _segment_granularity,
-    decode_segment_postings,
+    scan_segments,
 )
 from .score import query_terms_df
 from ..plans.stats import CorpusStats, corpus_stats, postings_df
@@ -574,6 +574,14 @@ def _conjunction_docs(
     return cand.astype(np.int64, copy=False)
 
 
+def _collect_conjunction(decoded, pdf, phrases, denied):
+    """Per phrase: the live docs of the segment holding every phrase term
+    (tombstoned docs are not candidates)."""
+    for qid, ts in phrases.items():
+        cand = _conjunction_docs(decoded, ts)
+        yield qid, cand[_live_mask(denied, cand)]
+
+
 def search_phrase(
     spark: SparkSession,
     index: IndexHandle,
@@ -620,44 +628,10 @@ def search_phrase(
     if not live:
         return empty
 
-    use_merged = index.merged_is_current()
-    base = index.merged_path if use_merged else index.segments_path
     needed = sorted({t for ts in live.values() for t in ts})
-    postings = _filter_terms(spark, spark.read.parquet(base), needed)
-    postings = _segment_granularity(spark, postings, index, "seg_id")
-    _del = index.deleted()
-    bc_live = spark.sparkContext.broadcast(
-        (live, _del if len(_del) else None)
-    )
-
-    def kernel(pdf: pd.DataFrame) -> pd.DataFrame:
-        live_map, denied = bc_live.value
-        decoded = decode_segment_postings(pdf)
-        out_q, out_d = [], []
-        for qid, ts in live_map.items():
-            cand = _conjunction_docs(decoded, ts)
-            if denied is not None and len(cand):
-                # liveDocs mask: tombstoned docs are not phrase candidates
-                # (same sorted-membership test as the MaxScore kernel's).
-                pos = np.searchsorted(denied, cand)
-                pos[pos == len(denied)] = 0
-                cand = cand[denied[pos] != cand]
-            if len(cand):
-                out_q.append(np.full(len(cand), qid, dtype=np.int32))
-                out_d.append(cand)
-        if not out_q:
-            return pd.DataFrame(
-                {
-                    "query_id": pd.Series([], dtype=np.int32),
-                    "doc_id": pd.Series([], dtype=np.int64),
-                }
-            )
-        return pd.DataFrame(
-            {"query_id": np.concatenate(out_q), "doc_id": np.concatenate(out_d)}
-        )
-
-    cands = postings.groupBy("seg_id").applyInPandas(
-        kernel, "query_id INT, doc_id LONG"
+    cands = scan_segments(
+        spark, index, needed, _collect_conjunction,
+        "query_id INT, doc_id LONG", live,
     )
 
     if toksed is None:

@@ -14,9 +14,11 @@ writeField, JVectorWriter.java:145,163,183). Our engine mirrors that shape:
          (the forceMerge analog)
 
 DocID contract for appends: each batch is sorted by (conv_id, turn_idx) and
-assigned docIDs from the next free segment boundary, so segment doc ranges
-stay disjoint and ascending in seg_id order (the invariant merge and the
-per-segment kernels rely on).
+assigned docIDs from the next free segment boundary at or above both the
+highest committed segment and the docID high-water mark (max manifest
+doc_hi + 1, stats.json's `max_doc`), so appended docIDs never collide with
+earlier ones and appended segment doc ranges stay disjoint and ascending
+in seg_id order.
 
 Exactly-once (round 4 — the same epoch-journal discipline as the vector
 index's append): segment-manifest resume alone is NOT idempotent across a
@@ -152,8 +154,12 @@ def append_batch(
     if resume_base is not None:
         base_seg = resume_base
     else:
+        # Start above both the highest segment and the docID high-water
+        # mark: an align_partitions build numbers segments by partition,
+        # so its docIDs can run past (max seg + 1) * seg_size.
         done = committed_segments(index_dir)
-        base_seg = (max(done) + 1) if done else 0
+        max_doc = max((m["doc_hi"] for m in done.values()), default=-1) + 1
+        base_seg = max(max(done, default=-1) + 1, -(-max_doc // seg_size))
         if log is not None:
             log["pending"] = {
                 "batch_id": int(batch_id), "base_seg": int(base_seg)

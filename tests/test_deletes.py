@@ -1,6 +1,8 @@
 """Soft deletes (operators/deletes.py) — the Lucene liveDocs contract:
 immediate search-time filtering with stale stats, merge-time purge with
-exact stats adjustment, idempotent re-merge."""
+exact stats adjustment, idempotent re-merge; and the docID space and
+stats across appends (deletable appended docs, unique docIDs after an
+align build, live-only stats after a purge)."""
 
 from __future__ import annotations
 
@@ -9,10 +11,15 @@ import os
 
 import numpy as np
 import pandas as pd
+import pyarrow.dataset as ds
 import pytest
 from pyspark.sql import functions as F
 
-from opensearch_jvector_plugin_spark.operators.build import build_index
+from opensearch_jvector_plugin_spark.functions.tokenizer import tokenize_text
+from opensearch_jvector_plugin_spark.operators.build import (
+    build_index,
+    committed_segments,
+)
 from opensearch_jvector_plugin_spark.operators.deletes import (
     delete_docs,
     deleted_docs,
@@ -20,10 +27,15 @@ from opensearch_jvector_plugin_spark.operators.deletes import (
 )
 from opensearch_jvector_plugin_spark.operators.merge import merge_segments
 from opensearch_jvector_plugin_spark.operators.query import (
+    decode_segment_postings,
     load_index,
     search,
     search_min_score,
 )
+from opensearch_jvector_plugin_spark.oracle import build_oracle_index, oracle_topk
+from opensearch_jvector_plugin_spark.sources.transcripts import reference_queries
+from opensearch_jvector_plugin_spark.streaming.incremental import append_batch
+from tests.test_bruteforce_rank_identity import assert_rank_identical
 
 
 @pytest.fixture()
@@ -237,3 +249,121 @@ def test_remerge_with_smaller_output_set_drops_stale_dirs(spark, built):
         .set_index("term")["df"]
     )
     assert merged_df.sort_index().equals(dict_df.sort_index().astype(merged_df.dtype))
+
+
+def _append(spark, d, pdf, **kw):
+    """append_batch the rows of `pdf` (it numbers them itself)."""
+    append_batch(spark.createDataFrame(pdf.drop(columns=["doc_id"])), d, **kw)
+
+
+def test_appended_doc_can_be_deleted(spark, small_corpus_pdf, tmp_path):
+    """Appended docIDs start at the next segment boundary (100000 here), far
+    above n_docs: the delete bound is the docID high-water mark, so an
+    appended doc is deletable, and search honors the delete."""
+    d = str(tmp_path / "appdel")
+    base = small_corpus_pdf.iloc[:1000]
+    build_index(spark.createDataFrame(base), d)  # one segment
+    tail = small_corpus_pdf.iloc[1000:1100]
+    _append(spark, d, tail)
+    # append_batch numbers the batch in (conv_id, turn_idx) order from the
+    # first docID of segment 1.
+    corpus = pd.concat(
+        [base, tail.assign(doc_id=100_000 + np.arange(len(tail)))]
+    )
+    victim = 100_005
+    queries = pd.concat([
+        reference_queries(2000),
+        pd.DataFrame([(12, " ".join(tokenize_text(tail.iloc[5]["text"])[:3]),
+                       10)], columns=["query_id", "query_text", "k"]),
+    ]).astype({"query_id": np.int32})
+    before = search(spark, load_index(d), queries).toPandas()
+    assert victim in set(before["doc_id"])
+
+    delete_docs(d, [victim])
+    # Stale-stats contract: the deleted doc still counts in n_docs/df.
+    live = set(corpus["doc_id"]) - {victim}
+    want = oracle_topk(
+        build_oracle_index(corpus), queries,
+        filters={int(q): live for q in queries["query_id"]},
+    )
+    assert_rank_identical(search(spark, load_index(d), queries).toPandas(),
+                          want)
+    with pytest.raises(ValueError, match="out of range"):
+        delete_docs(d, [100_000 + len(tail)])
+
+
+def test_append_after_align_build_keeps_doc_ids_unique(
+    spark, small_corpus_pdf, tmp_path
+):
+    """An align_partitions build numbers segments by partition, so its
+    docIDs run past (max seg + 1) * seg_size; an append must start above
+    the docID high-water mark instead."""
+    d = str(tmp_path / "alignapp")
+    base = small_corpus_pdf.iloc[:1000]
+    build_index(spark.createDataFrame(base).repartition(2), d,
+                align_partitions=True)
+    assert len(committed_segments(d)) == 2
+    _append(spark, d, small_corpus_pdf.iloc[1000:1300], seg_size=250)
+
+    postings = ds.dataset(
+        os.path.join(d, "segments"), format="parquet", partitioning="hive"
+    ).to_table().to_pandas()
+    per_seg = [
+        np.unique(np.concatenate(
+            [v[0] for v in decode_segment_postings(g).values()]
+        ))
+        for _sid, g in postings.groupby("seg_id")
+    ]
+    all_docs = np.concatenate(per_seg)
+    assert len(all_docs) == len(np.unique(all_docs)) == 1300
+
+    # The batch starts at ceil(max_doc / seg_size) * seg_size = 1000, so its
+    # docIDs are the fixture's.
+    queries = reference_queries(2000)
+    want = oracle_topk(
+        build_oracle_index(small_corpus_pdf.iloc[:1300]), queries
+    )
+    assert_rank_identical(search(spark, load_index(d), queries).toPandas(),
+                          want)
+
+
+def test_append_after_purging_merge_counts_live_docs(
+    spark, small_corpus_pdf, tmp_path
+):
+    """Build 1,000, delete 50, merge (purge), append 100: stats and dfs
+    cover the 1,050 live docs, not the purged ones again."""
+
+    d = str(tmp_path / "purgeapp")
+    base = small_corpus_pdf.iloc[:1000]
+    build_index(spark.createDataFrame(base), d, seg_size=250)
+    victims = list(range(0, 1000, 20))
+    delete_docs(d, victims)
+    merge_segments(spark, load_index(d))
+    tail = small_corpus_pdf.iloc[1000:1100]
+    _append(spark, d, tail, seg_size=250)
+
+    oracle = build_oracle_index(
+        pd.concat([base[~base["doc_id"].isin(victims)], tail])
+    )
+    with open(os.path.join(d, "stats.json")) as f:
+        stats = json.load(f)
+    assert stats["n_docs"] == oracle.n_docs == 1050
+    assert stats["total_dl"] == sum(oracle.dl.values())
+    assert stats["avgdl"] == pytest.approx(oracle.avgdl, rel=1e-12)
+    assert stats["max_doc"] == 1100
+    dict_df = spark.read.parquet(os.path.join(d, "dict")).toPandas()
+    assert dict(zip(dict_df["term"], dict_df["df"].astype(int))) == oracle.df
+
+    queries = reference_queries(2000)
+    want = oracle_topk(oracle, queries)
+    idx = load_index(d)
+    assert not idx.merged_is_current()
+    assert_rank_identical(search(spark, idx, queries).toPandas(), want)
+    # A re-merge purges nothing new: stats stay, merged serving agrees.
+    merge_segments(spark, load_index(d))
+    with open(os.path.join(d, "stats.json")) as f:
+        assert json.load(f) == stats
+    assert_rank_identical(
+        search(spark, load_index(d), queries, use_merged=True).toPandas(),
+        want,
+    )

@@ -95,6 +95,23 @@ def test_search_rank_identity_many_terms(spark, built, small_corpus_pdf):
     assert "BroadcastHashJoin" in plan
 
 
+def test_search_few_terms_push_term_filter_into_scan(spark, built):
+    """A batch of <= 64 terms filters the postings with an In() that pushes
+    into the Parquet scan, so row groups without the terms are skipped."""
+    queries = reference_queries(2000)
+    plan = (
+        search(spark, load_index(built[1]), queries)
+        ._jdf.queryExecution().executedPlan().toString()
+    )
+    scans = [
+        line for line in plan.splitlines()
+        if "FileScan parquet" in line and "segments" in line
+    ]
+    assert scans, plan
+    assert all("PushedFilters: [" in line and "In(term, [" in line
+               for line in scans), scans
+
+
 def test_merge_then_query_identity(spark, built, small_corpus_pdf):
     one, eight = built
     index = load_index(eight)

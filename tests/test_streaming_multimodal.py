@@ -291,6 +291,54 @@ def test_stale_merge_detected_after_append(spark, small_corpus_pdf, tmp_path):
     with _pytest.raises(ValueError, match="stale"):
         search_min_score(spark, idx, rq, use_merged=True).count()
 
+    # Gated full scoring and the indexed phrase serve through the same
+    # segment scan: auto mode falls back to the raw segments (so an
+    # appended doc's own phrase finds it) and matches the declarative twin.
+    from opensearch_jvector_plugin_spark.functions.tokenizer import (
+        tokenize_text,
+    )
+    from opensearch_jvector_plugin_spark.operators.indexed_text import (
+        search_msm,
+        search_weighted_all,
+    )
+    from opensearch_jvector_plugin_spark.operators.phrase import (
+        msm_scores,
+        phrase_scores,
+        search_phrase,
+    )
+
+    def norm(pdf):
+        pdf = pdf[["query_id", "doc_id", "score"]].astype(
+            {"query_id": np.int64, "doc_id": np.int64}
+        )
+        return (pdf.assign(score=pdf["score"].round(6))
+                .sort_values(["query_id", "doc_id"]).reset_index(drop=True))
+
+    corpus = spark.createDataFrame(small_corpus_pdf)
+    toks = tokenize_text(small_corpus_pdf.iloc[1500]["text"])
+    tq = pd.DataFrame([(0, f"{toks[0]} {toks[1]}", 10)],
+                      columns=["query_id", "query_text", "k"])
+    got_p = norm(search_phrase(spark, idx, corpus, tq).toPandas())
+    assert 1500 in set(got_p["doc_id"])
+    pd.testing.assert_frame_equal(
+        got_p, norm(phrase_scores(corpus, tq).toPandas())
+    )
+    mq = tq[["query_id", "query_text"]]
+    got_m = norm(search_msm(spark, idx, mq, {0: 2}).toPandas())
+    assert 1500 in set(got_m["doc_id"])
+    pd.testing.assert_frame_equal(
+        got_m,
+        norm(msm_scores(
+            corpus,
+            spark.createDataFrame(mq, "query_id INT, query_text STRING"),
+            {0: 2},
+        ).toPandas()),
+    )
+    with _pytest.raises(ValueError, match="stale"):
+        search_weighted_all(
+            spark, idx, {0: {toks[0]: 1.0}}, use_merged=True
+        ).count()
+
     # Re-merging restores merged serving.
     merge_segments(spark, load_index(d))
     got2 = search(spark, load_index(d), queries, use_merged=True).toPandas()
